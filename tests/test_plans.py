@@ -230,12 +230,25 @@ def test_pagerank_beyond_broadcast_limit_no_edge_reshuffle(spark):
     assert "ShuffledHashJoin" in plan
     assert not re.search(r"SortMergeJoin \[src#", plan), plan
     # the edge side must come straight from the cached pre-partitioned
-    # layout: no Exchange directly above the edge InMemoryTableScan
-    lines = plan.splitlines()
-    for i, line in enumerate(lines):
-        if "InMemoryTableScan" in line and "src#" in line:
-            above = lines[max(0, i - 2):i]
-            assert not any("Exchange" in l for l in above), plan
+    # layout: the live plan scans the edge cache, with no Exchange
+    # directly above the scan. The printed tree also embeds each cache's
+    # BUILD plan under its InMemoryRelation node (the one-time
+    # repartition and degree exchanges); those subtrees are skipped.
+    lines, build_depth = [], None
+    for line in plan.splitlines():
+        depth = re.search(r"[^ :+\-]", line).start()
+        if build_depth is not None and depth > build_depth:
+            continue
+        build_depth = depth if "InMemoryRelation" in line else None
+        lines.append(line)
+    edge_scans = [
+        i for i, line in enumerate(lines)
+        if "InMemoryTableScan" in line and "src#" in line and "dst#" in line
+    ]
+    assert edge_scans, plan
+    for i in edge_scans:
+        above = lines[max(0, i - 2):i]
+        assert not any("Exchange" in l for l in above), plan
 
     broadcasted = pagerank(edges, iters=2, checkpoint=False)
     got = {r.node: r.rank for r in shuffled.collect()}

@@ -44,10 +44,10 @@ def test_prefix_sum_output_reads_the_collected_partitioning(spark):
     DataFrame must read the SAME materialized partitioning.  Since r08
     that pin is a ``localCheckpoint`` (LogicalRDD scan, lineage CUT —
     re-executing repartitionByRange is impossible by construction),
-    with its OWN lifetime: a janitor rollover from an interleaved
-    dedup-operator call must not be able to unpersist it (the r07
-    failure mode: stale offsets against a re-sampled exchange)."""
-    from usda_food_data_pipeline_spark.operators.dedup import _INTERMEDIATES
+    held by the query scope: an interleaved dedup-operator call inside
+    the same scope must not be able to unpersist it (the r07 failure
+    mode: stale offsets against a re-sampled exchange)."""
+    from usda_food_data_pipeline_spark.operators.dedup import minhash_lsh_pairs
 
     df = spark.createDataFrame([(i, i % 3) for i in range(100)], ["id", "v"])
     out = global_prefix_sum(df, [F.col("id")], "v", num_partitions=4)
@@ -56,9 +56,10 @@ def test_prefix_sum_output_reads_the_collected_partitioning(spark):
     # with no Exchange / repartitionByRange left to re-execute
     assert "ExistingRDD" in plan or "LogicalRDD" in plan, plan
     assert "RepartitionByExpression" not in plan, plan
-    # own lifetime: a janitor rollover (what any subsequent tracked
-    # operator call does) must not invalidate the output
-    _INTERMEDIATES.rollover([])
+    # an interleaved dedup-operator call in the same scope must not
+    # invalidate the output
+    docs = spark.createDataFrame([(1, "a b c d"), (2, "a b c e")], "doc_id int, text string")
+    minhash_lsh_pairs(docs, "doc_id", "text").count()
     got = {r["id"]: r["cum"] for r in out.collect()}
     assert got == {i: sum(j % 3 for j in range(i + 1)) for i in range(100)}
 

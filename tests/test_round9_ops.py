@@ -451,8 +451,8 @@ def test_lsh_recall_eval_invariants(spark):
     (precision 1 — both sides verify with exact integer Jaccard at the
     same threshold), so sum(n_hit) == |lsh_pairs ∩ truth| == |lsh_pairs
     restricted to truth keys|.  Runs the registered composite twice
-    back-to-back to exercise the janitor track() path (second call's
-    rollover retires the first call's materialized sides)."""
+    back-to-back: opening the second call's scope releases what the
+    first call persisted, after its rows were collected."""
     from usda_food_data_pipeline_spark import registry
 
     sf = "/root/testdata/sf0.001"

@@ -209,26 +209,23 @@ def test_kcore_peel_keeps_clique_drops_chain(spark):
     assert got1[11] == 1  # superset-from-above: not yet converged
 
 
-def test_kcore_peel_releases_checkpoint_generations(spark):
+def test_kcore_peel_releases_checkpoint_generations(spark, persistent_rdd_ids, next_query):
     """r08 ADVICE (medium): unpersist() is a no-op on localCheckpoint
     blocks, so the peel loop must retire superseded survivor-set
-    generations through CheckpointJanitor (the pagerank discipline) —
-    only the final result's checkpoint generation may stay alive."""
-    from usda_food_data_pipeline_spark.operators.dedup import (
-        persistent_rdd_ids,
-        release_rdd_blocks,
-    )
+    generations through the query scope (the pagerank discipline) —
+    only the final result's checkpoint generation (and the persisted
+    edge list) may stay alive until the next query opens."""
     from usda_food_data_pipeline_spark.operators.graph import kcore_peel
 
-    spark.catalog.clearCache()
-    before = persistent_rdd_ids(spark)
+    before = persistent_rdd_ids()
     clique = [(a, b) for a in range(4) for b in range(4) if a < b]
     chain = [(3, 10), (10, 11), (11, 12)]
     edges = spark.createDataFrame(clique + chain, ["src", "dst"])
     out = kcore_peel(edges, k=2, rounds=5)
     out.count()
-    live = persistent_rdd_ids(spark) - before
+    live = persistent_rdd_ids() - before
     # 5 rounds + final = 6 checkpoints created; all but the final one
-    # (1-2 RDD ids) must have been released by the janitor
+    # (1-2 RDD ids) must have been released each round
     assert len(live) <= 2, f"stranded checkpoint generations: {live}"
-    release_rdd_blocks(spark, live)
+    next_query()
+    assert not (persistent_rdd_ids() - before)

@@ -4,6 +4,7 @@ re-expressed Spark-first.
 
 Layout:
     session    — SparkSession factory tuned for local[N] testing, cluster-safe defaults
+    scope      — query-scoped lifetime of every persist and local checkpoint
     sources    — parquet/CSV scans of the star schema, ingest utilities, sinks
     functions  — scalar cleaning functions (SURVEY §2.6) + text analytics
     operators  — dedup, top-k, pivot, joins, vector similarity, multimodal

@@ -30,6 +30,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import scope
+
 
 def word_frequency(df: DataFrame, text_col: str) -> DataFrame:
     """Corpus → (word, weight) distinct-word table. The ONLY
@@ -89,7 +91,7 @@ def bpe_train(
     vocab = word_frequency(df, text_col).withColumn(
         "symbols", F.split(F.col("word"), "")
     )
-    vocab = vocab.select("symbols", "weight").localCheckpoint(eager=True)
+    vocab = scope.checkpoint(vocab.select("symbols", "weight"))
 
     rules: list[tuple[int, str, str, str, int]] = []
     for step in range(1, n_merges + 1):
@@ -107,9 +109,12 @@ def bpe_train(
             break
         left, right, n = best[0]["left"], best[0]["right"], int(best[0]["n"])
         rules.append((step, left, right, left + right, n))
-        vocab = vocab.select(
-            merge_pair(F.col("symbols"), left, right).alias("symbols"), "weight"
-        ).localCheckpoint(eager=True)
+        prev, vocab = vocab, scope.checkpoint(
+            vocab.select(merge_pair(F.col("symbols"), left, right).alias("symbols"), "weight")
+        )
+        scope.release(prev)
+    # the merge table is all the caller gets; no later stage reads the vocab
+    scope.release(vocab)
     return rules
 
 
@@ -184,7 +189,7 @@ def bpe_encode_arrow(tokens: Column, rules: list[tuple[int, str, str, str, int]]
         res = []
         for toks in tok_ser:
             if toks is None:
-                res.append([])
+                res.append(None)  # null in, null out, as in bpe_encode
                 continue
             pieces: list = []
             for w in toks:

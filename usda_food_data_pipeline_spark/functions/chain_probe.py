@@ -306,6 +306,7 @@ def ln_domain_census(
     """
     from pyspark.sql import functions as F
 
+    from .. import scope
     from ..operators.dedup import md5_int, tokenize
     from .dsir import HASH_SEED, _bigrams
     from .lm import _adjacent_pairs
@@ -314,41 +315,31 @@ def ln_domain_census(
     spark = docs.sparkSession
 
     # --- lm domains (functions/lm.py:125-171 construction) ---
-    toks = (
-        docs.filter(F.col(source_col) == train_source)
-        .select(tokenize(F.col(text_col)).alias("toks"))
-        .persist()
+    toks = scope.persist(
+        docs.filter(F.col(source_col) == train_source).select(
+            tokenize(F.col(text_col)).alias("toks")
+        )
     )
-    try:
-        uni = (
-            toks.select(F.explode("toks").alias("w"))
-            .groupBy("w")
-            .agg(F.count("*").alias("c"))
-        )
-        bg = (
-            toks.select(F.explode(_adjacent_pairs(F.col("toks"))).alias("p"))
-            .select(F.col("p.prev").alias("prev"), F.col("p.cur").alias("cur"))
-            .groupBy("prev", "cur")
-            .agg(F.count("*").alias("c"))
-        )
-        # the two bounded collects run concurrently (the lm.py:156-167
-        # construction this census certifies — both read the toks cache)
-        from concurrent.futures import ThreadPoolExecutor
+    uni = toks.select(F.explode("toks").alias("w")).groupBy("w").agg(F.count("*").alias("c"))
+    bg = (
+        toks.select(F.explode(_adjacent_pairs(F.col("toks"))).alias("p"))
+        .select(F.col("p.prev").alias("prev"), F.col("p.cur").alias("cur"))
+        .groupBy("prev", "cur")
+        .agg(F.count("*").alias("c"))
+    )
+    # the two bounded collects run concurrently (the lm_score_stupid_backoff
+    # construction this census certifies — both read the toks cache)
+    from concurrent.futures import ThreadPoolExecutor
 
-        with ThreadPoolExecutor(2) as pool:
-            f_bg = pool.submit(
-                lambda: sorted(
-                    int(r["c"]) for r in bg.select("c").distinct().collect()
-                )
-            )
-            f_uni = pool.submit(
-                lambda: uni.agg(
-                    F.sum("c").alias("_n"), F.collect_set("c").alias("_vals")
-                ).collect()[0]
-            )
-            bg_vals, st = f_bg.result(), f_uni.result()
-    finally:
-        toks.unpersist()
+    with ThreadPoolExecutor(2) as pool:
+        f_bg = pool.submit(
+            lambda: sorted(int(r["c"]) for r in bg.select("c").distinct().collect())
+        )
+        f_uni = pool.submit(
+            lambda: uni.agg(F.sum("c").alias("_n"), F.collect_set("c").alias("_vals")).collect()[0]
+        )
+        bg_vals, st = f_bg.result(), f_uni.result()
+    scope.release(toks)
     n_total = int(st["_n"] or 0)
     uni_vals = sorted(int(v) for v in (st["_vals"] or []))
     back_vals = sorted({1} | set(uni_vals))

@@ -37,6 +37,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from .. import scope
 from ..operators.dedup import tokenize
 
 LP_SCALE = 9
@@ -71,7 +72,7 @@ def nb_train(
     # distinct-count collect, the model join); persist so the corpus
     # token stream is exploded and aggregated once — tc is
     # |classes| x |vocab| rows
-    tc = toks.groupBy("_y", "token").agg(F.count(F.lit(1)).alias("_c")).persist()
+    tc = scope.persist(toks.groupBy("_y", "token").agg(F.count(F.lit(1)).alias("_c")))
     # class token totals + overall vocab size: tiny aggregates off the
     # (label, token) count table, collected (|classes| rows / 1 row)
     totals = {

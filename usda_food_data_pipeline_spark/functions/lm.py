@@ -53,6 +53,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import scope
 from ..operators.dedup import tokenize
 
 # Brants et al.'s backoff constant. Encoded in the scoring path as the
@@ -70,27 +71,6 @@ def _adjacent_pairs(toks: Column) -> Column:
     return F.arrays_zip(
         F.slice(toks, 1, m).alias("prev"), F.slice(toks, 2, m).alias("cur")
     )
-
-
-def lm_train_counts(
-    train_docs: DataFrame, text_col: str = "text"
-) -> tuple[DataFrame, DataFrame]:
-    """(unigram counts ``w, c``, bigram counts ``prev, cur, c``) over the
-    reference corpus.  Both are plain aggregations whose exchanges carry
-    count rows only (vocab- / bigram-bounded, never corpus-bounded)."""
-    toks = train_docs.select(tokenize(F.col(text_col)).alias("toks"))
-    uni = (
-        toks.select(F.explode("toks").alias("w"))
-        .groupBy("w")
-        .agg(F.count("*").alias("c"))
-    )
-    bg = (
-        toks.select(F.explode(_adjacent_pairs(F.col("toks"))).alias("p"))
-        .select(F.col("p.prev").alias("prev"), F.col("p.cur").alias("cur"))
-        .groupBy("prev", "cur")
-        .agg(F.count("*").alias("c"))
-    )
-    return uni, bg
 
 
 def lm_score_stupid_backoff(
@@ -119,17 +99,16 @@ def lm_score_stupid_backoff(
         py_grid_nanos,
         py_ln_int,
     )
-    from ..operators.dedup import _INTERMEDIATES
 
     spark = docs.sparkSession
     # tokenize the training slice ONCE: both count tables read this
     # cache (r07 verdict task 6 — the model-build jobs previously
     # re-tokenized the slice per consumer).  Released below as soon as
     # uni/bg are materialized; never escapes this function.
-    toks = (
-        docs.filter(F.col(source_col) == train_source)
-        .select(tokenize(F.col(text_col)).alias("toks"))
-        .persist()
+    toks = scope.persist(
+        docs.filter(F.col(source_col) == train_source).select(
+            tokenize(F.col(text_col)).alias("toks")
+        )
     )
     uni = (
         toks.select(F.explode("toks").alias("w"))
@@ -144,10 +123,8 @@ def lm_score_stupid_backoff(
     )
     # The model tables feed several consumers (log-table collects + the
     # scoring joins); persist so each is aggregated once.
-    # Janitor-tracked: the NEXT tracked operator call retires them.
-    uni = uni.persist()
-    bg = bg.persist()
-    _INTERMEDIATES.rollover([uni, bg])
+    uni = scope.persist(uni)
+    bg = scope.persist(bg)
 
     # Portable log tables (see module docstring): two bounded driver
     # jobs build everything — distinct bigram counts, and one pass over
@@ -169,7 +146,7 @@ def lm_score_stupid_backoff(
             ).collect()[0]
         )
         bg_vals, st = f_bg.result(), f_uni.result()
-    toks.unpersist()
+    scope.release(toks)
     n_total = int(st["_n"] or 0)
     uni_vals = sorted(int(v) for v in (st["_vals"] or []))
     back_vals = sorted({1} | set(uni_vals))

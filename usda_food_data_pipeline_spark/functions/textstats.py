@@ -11,6 +11,7 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from .. import scope
 from ..operators.dedup import md5_int, tokenize
 
 # Tiny per-language stopword profiles for the n-gram/stopword heuristic
@@ -301,7 +302,7 @@ def token_surprisal(df, id_col: str, text_col: str):
     toks = df.select(F.col(id_col), F.explode(tokenize(F.col(text_col))).alias("token"))
     # counts feeds the distinct-n collect and the occurrence join;
     # persist so the corpus is tokenized once
-    counts = toks.groupBy("token").agg(F.count(F.lit(1)).alias("n")).persist()
+    counts = scope.persist(toks.groupBy("token").agg(F.count(F.lit(1)).alias("n")))
     n_total = int(toks.agg(F.count(F.lit(1))).collect()[0][0] or 0)
     # portable ln over the distinct count values, as exact grid nanos
     ln_tbl = literal_table(
@@ -425,14 +426,13 @@ def boilerplate_scrub(
     # rebuild pass; persist so tokenize+chunk runs once (the tf-idf
     # posting-list pattern — at warehouse scale this is a written
     # intermediate table, in-session a MEMORY_AND_DISK cache)
-    chunked = df.select(F.col(id_col), chunks_expr.alias("_chunks")).persist()
-    bp_hashes = (
+    chunked = scope.persist(df.select(F.col(id_col), chunks_expr.alias("_chunks")))
+    bp_hashes = scope.persist(
         chunked.select(F.explode("_chunks").alias("_c"))
         .groupBy(F.md5("_c").alias("_h"))
         .agg(F.count(F.lit(1)).alias("_cnt"))
         .filter(F.col("_cnt") >= min_count)
         .select("_h")
-        .persist()
     )
     n_bp = bp_hashes.count()
 
@@ -619,14 +619,8 @@ def doc_repetition(df, id_col: str, text_col: str):
         F.col(id_col), F.explode(_bigrams(tokenize(F.col(text_col)))).alias("g")
     )
     # the (doc, bigram) count table feeds the rollup AND the top-1
-    # window; persist so the corpus tokenizes once.  Janitor-tracked:
-    # safe here (unlike prefix.py's cache) because no collected
-    # constant couples to this materialization — an early unpersist
-    # merely recomputes the same deterministic counts.
-    cnt = occ.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c")).persist()
-    from ..operators.dedup import _INTERMEDIATES
-
-    _INTERMEDIATES.rollover([cnt])
+    # window; persist so the corpus tokenizes once
+    cnt = scope.persist(occ.groupBy(id_col, "g").agg(F.count(F.lit(1)).alias("c")))
     per = cnt.groupBy(id_col).agg(
         F.sum("c").cast("bigint").alias("n_bigrams"),
         F.sum(F.when(F.col("c") >= 2, F.col("c")).otherwise(F.lit(0)))
@@ -783,11 +777,10 @@ def dedup_lines_global(df, id_col: str, text_col: str, chunk_tokens: int = 2):
         raise ValueError(f"chunk_tokens must be positive, got {k}")
     # persist: both the posexplode side and the per-doc totals consume
     # this tokenize+chunk projection; without it the whole-corpus
-    # tokenize chain evaluates twice (released by the session's
-    # clear_engine_caches between queries, as boilerplate_scrub does)
-    base = df.select(
-        F.col(id_col), chunk_array(tokenize(F.col(text_col)), k).alias("_chunks")
-    ).persist()
+    # tokenize chain evaluates twice
+    base = scope.persist(
+        df.select(F.col(id_col), chunk_array(tokenize(F.col(text_col)), k).alias("_chunks"))
+    )
     exploded = base.select(
         id_col, F.posexplode("_chunks").alias("_pos", "_chunk")
     )

@@ -19,6 +19,8 @@ import pandas  # noqa: F401 — resolves pandas_udf postponed type hints
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import scope
+
 
 def dedup_latest(
     df: DataFrame, key_cols: list[str], order_col: str, keep: str = "max"
@@ -227,171 +229,6 @@ def cap_bucket_qualify_sql(keys: str, max_rows: int) -> str:
     return f"QUALIFY count(*) OVER (PARTITION BY {keys}) <= {max_rows}"
 
 
-# --- iterative-loop checkpoint hygiene -------------------------------------
-# DataFrame.unpersist() is a documented no-op on localCheckpoint blocks,
-# and waiting for ContextCleaner ties release to DRIVER GC pressure —
-# executor storage grows across rounds of an iterative algorithm until a
-# driver-side collection happens to trigger GC (r03 verdict item 5). The
-# persistent-RDD registry exposes the block-holding handles directly, so
-# superseded generations are released the moment the next one lands.
-
-
-def persistent_rdd_ids(spark, checkpointed_only: bool = False) -> set[int]:
-    """Ids of every currently block-holding RDD (persisted OR checkpointed).
-
-    ``checkpointed_only`` restricts to localCheckpoint blocks — the
-    filter that lets the janitor release checkpoint generations without
-    ever touching a persist()'d cache that happened to materialize
-    during the same action (e.g. the CC loop's edge table on round 1).
-    """
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    ids = set(jmap.keySet().toArray())
-    if not checkpointed_only:
-        return ids
-    out = set()
-    for rid in ids:
-        handle = jmap.get(rid)
-        if handle is not None and handle.rdd().isLocallyCheckpointed():
-            out.add(rid)
-    return out
-
-
-def release_rdd_blocks(spark, ids: set[int]) -> None:
-    """Explicitly free the storage blocks behind ``ids`` (non-blocking)."""
-    jmap = spark.sparkContext._jsc.getPersistentRDDs()
-    for rid in ids:
-        if jmap.containsKey(rid):
-            jmap.get(rid).unpersist(False)
-
-
-class CheckpointJanitor:
-    """Tracks the localCheckpoint generation of an iterative loop and
-    frees the previous generation's blocks when a new one supersedes it.
-
-    Usage per round::
-
-        df = janitor.checkpoint(df)   # localCheckpoints df itself
-
-    ``checkpoint`` brackets the eager localCheckpoint with two registry
-    snapshots, so the new generation is identified from the 1-2 DIFF
-    ids alone — the per-id ``isLocallyCheckpointed`` filter (a py4j
-    round trip each) never scans the whole registry, keeping the
-    janitor's per-round cost at ~4 py4j calls (an unbracketed
-    full-registry scan measured ~10% of the whole CC query). The
-    checkpointed-only filter on the diff guarantees a persist()'d cache
-    that happens to materialize during the same action (e.g. the CC
-    loop's edge table on round 1) is never touched. Call ``close()``
-    only once the final result is materialized (leave it to GC while
-    the returned DataFrame is still lazy).
-    """
-
-    def __init__(self, spark):
-        self._spark = spark
-        self._gen: set[int] = set()
-
-    def checkpoint(self, df: DataFrame) -> DataFrame:
-        jmap = self._spark.sparkContext._jsc.getPersistentRDDs()
-        before = set(jmap.keySet().toArray())
-        out = df.localCheckpoint(eager=True)
-        jmap = self._spark.sparkContext._jsc.getPersistentRDDs()
-        new_gen = set()
-        for rid in jmap.keySet().toArray():
-            if rid in before:
-                continue
-            handle = jmap.get(rid)
-            if handle is not None and handle.rdd().isLocallyCheckpointed():
-                new_gen.add(rid)
-        release_rdd_blocks(self._spark, self._gen)
-        self._gen = new_gen
-        return out
-
-    def close(self) -> None:
-        release_rdd_blocks(self._spark, self._gen)
-        self._gen = set()
-
-
-class _IntermediateJanitor:
-    """Generational tracker for the persisted intermediates of
-    engine operators (MinHash signature tables, shingle/prefix
-    occupancy tables, quantized point tables, model count tables).
-
-    Those operators return LAZY DataFrames whose plans read the caches,
-    so the operator itself must not unpersist before returning.
-    Instead, each new tracked operator call retires the PREVIOUS call's
-    generation: by then the previous result has been consumed (the
-    registry/bench pattern — one query materializes before the next
-    builds), and if a caller still holds it lazily, unpersist merely
-    degrades that plan to recompute — never a wrong answer. A session
-    running the whole registry back-to-back therefore holds at most one
-    generation of intermediate blocks instead of accumulating one per
-    query until driver GC (see test_checkpoint_release.py).
-
-    Driver-side and single-generation by design.  Tracked (rollover)
-    call sites — ADVICE r11 low 2, kept current:
-
-    - dedup operators: minhash signatures (exact/LSH/incremental pair
-      generators), jaccard prefix tables, simhash fingerprints
-      (this module: minhash_lsh_pairs, jaccard_pairs_prefix,
-      dedup-exact fp, incremental sig_a/sig_b, containment sh_t,
-      simhash_neardup fp);
-    - kmeans family: the quantized point table in kmeans_assign,
-      pq_quantize, pq_adc_topk, ivf_adc_topk (operators/kmeans.py);
-    - model/count tables: functions/lm.py (uni+bg), functions/dsir.py
-      (dc), functions/pmi.py (toks+uni+bg), functions/textstats.py
-      (cnt), registry_text q_maxsim_retrieval (cnt), registry_select
-      (ex0, baskets), registry_curation (`track` of a persisted side).
-
-    CONTRACT for composites: at most one tracked-operator call may be
-    live per materialization — a composite that needs results from two
-    tracked operators must persist + count the first result and
-    ``track()`` it (lsh_recall_eval's pattern below) BEFORE invoking
-    the second, whose rollover frees the first call's build caches.
-    Every registry composite satisfies this today (dedup_clusters /
-    incremental_dedup contain exactly one tracked call;
-    lsh_recall_eval, split_leakage and training_pipeline use the
-    track() protocol — training_pipeline tracks its persisted deduped
-    table after the minhash rollover (r12); the kmeans-consumer
-    queries each call kmeans_assign once).
-    """
-
-    def __init__(self) -> None:
-        self._gen: list[DataFrame] = []
-
-    def rollover(self, dfs: list[DataFrame]) -> None:
-        self.release()
-        self._gen = list(dfs)
-
-    def track(self, df: DataFrame) -> None:
-        """Attach an ALREADY-MATERIALIZED persisted DataFrame to the
-        current generation so the next tracked operator call retires it
-        too.  For composites that must hold results from more than one
-        tracked operator (e.g. lsh_recall_eval joins exact-Jaccard truth
-        with LSH pairs): persist + count each side BEFORE invoking the
-        next tracked operator (whose rollover frees the previous
-        operator's build caches — harmless once the side is
-        materialized), then track the materialized side here."""
-        self._gen.append(df)
-
-    def release(self) -> None:
-        import contextlib
-
-        for df in self._gen:
-            with contextlib.suppress(Exception):
-                df.unpersist(False)
-        self._gen = []
-
-
-_INTERMEDIATES = _IntermediateJanitor()
-
-
-def release_dedup_caches() -> None:
-    """Free the persisted intermediates of the most recent pair-
-    generating dedup operator call (long-lived sessions can call this
-    after consuming a result instead of waiting for the next query's
-    rollover)."""
-    _INTERMEDIATES.release()
-
-
 def tokenize(col: Column) -> Column:
     """Lower-cased whitespace tokens (empty tokens removed)."""
     return F.filter(F.split(F.lower(F.trim(col)), r"\s+"), lambda t: t != F.lit(""))
@@ -503,9 +340,7 @@ def minhash_lsh_pairs(
     # the signature table feeds three plan branches (banding + two
     # candidate-verify attaches); persist it so shingling/hashing runs
     # once — at cluster scale this is a materialized intermediate table
-    sig = sig.persist()
-    # retire the previous dedup query's intermediates; track this one's
-    _INTERMEDIATES.rollover([sig])
+    sig = scope.persist(sig)
 
     # band value = concat of its rows' minhashes; explode to (band_id,
     # bucket). The banded rows carry ONLY (doc_id, band, bucket) — the
@@ -759,7 +594,7 @@ def jaccard_pairs_prefix(
     ).withColumn("sz", F.size("sh"))
     # feeds the df-count, the prefix build, and both verify attaches —
     # materialize once (at cluster scale: an intermediate table)
-    sh_t = sh_t.persist()
+    sh_t = scope.persist(sh_t)
 
     ex = sh_t.select("doc_id_", "sz", F.explode("sh").alias("s"))
     dfreq = ex.groupBy("s").agg(F.count(F.lit(1)).alias("df_n"))
@@ -778,13 +613,9 @@ def jaccard_pairs_prefix(
     # without it every join side replays shingling + df + window (the
     # unpersisted form measured ~2× wall-clock at sf0.1)
     occ = prefix.groupBy("s").agg(F.count(F.lit(1)).alias("_occ"))
-    withocc = (
-        prefix.join(occ, "s")
-        .withColumn("_hot", (F.col("_occ") > max_bucket).cast("long"))
-        .persist()
+    withocc = scope.persist(
+        prefix.join(occ, "s").withColumn("_hot", (F.col("_occ") > max_bucket).cast("long"))
     )
-    # retire the previous dedup query's intermediates; track this one's
-    _INTERMEDIATES.rollover([sh_t, withocc])
     # per-doc constants for the candidate filter: size + hot-entry
     # count. One slim row per doc, joined back onto the AGGREGATED pair
     # stream — never carried through the collision exchange. Join
@@ -1075,16 +906,14 @@ def simhash_neardup_pairs(
     mask = (1 << r) - 1
     from ..sources.tables import spread
 
-    fp = (
+    fp = scope.persist(
         spread(df)
         .select(
             F.col(id_col).alias("doc_id_"),
             simhash_token_hashes_wide(tokenize(F.col(text_col)), bits).alias("_sh"),
         )
         .select("doc_id_", simhash_from_hashes(F.col("_sh"), bits).alias("fp"))
-        .persist()
     )
-    _INTERMEDIATES.rollover([fp])
     banded = fp.select(
         "doc_id_",
         "fp",
@@ -1168,11 +997,10 @@ def connected_components(
         raise ValueError(f"unknown algorithm {algorithm!r}: use 'label' or 'star'")
     # persist the edge list: every iteration joins against it, and its
     # lineage (e.g. a full MinHash pipeline) must not replay per round
-    und = (
+    und = scope.persist(
         edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .union(edges.select(F.col(id_b).alias("src"), F.col(id_a).alias("dst")))
         .distinct()
-        .persist()
     )
     all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
     # Iterate ONLY over nodes that touch an edge — in a near-dup setting
@@ -1202,19 +1030,19 @@ def connected_components(
     # localCheckpoint: propagate() references the previous labels
     # twice, so plain persist still doubles the logical plan per
     # round and Catalyst re-optimization cost compounds; truncating
-    # lineage keeps every round O(1) planning work. Superseded
-    # generations are freed EXPLICITLY each round (CheckpointJanitor)
-    # — unpersist() is a no-op on checkpoint blocks and ContextCleaner
-    # only runs on driver GC, so storage otherwise grows with rounds.
-    janitor = CheckpointJanitor(labels.sparkSession)
+    # lineage keeps every round O(1) planning work. Each superseded
+    # generation is released as soon as the next one lands, so storage
+    # stays one generation flat however many rounds run.
+    gen = None  # the live checkpointed label generation
     for _ in range(max_iter):
-        new_labels = janitor.checkpoint(propagate(labels))
-        changed = new_labels.filter(F.col("_changed")).limit(1).count()
-        labels = new_labels.drop("_changed")
+        new_gen = scope.checkpoint(propagate(labels))
+        scope.release(gen)
+        gen = new_gen
+        changed = gen.filter(F.col("_changed")).limit(1).count()
+        labels = gen.drop("_changed")
         if changed == 0:
             converged = True
             break
-    und.unpersist()
     if not converged:
         # silent non-convergence would return WRONG components (and
         # mismatch the exact recursive-CTE oracle) — fail loudly instead
@@ -1270,11 +1098,10 @@ def _connected_components_star(
     xxhash64 checksum — an aggregate probe, no collect); at the fixpoint
     every component is a star centered on its min node."""
     all_nodes = nodes.select(F.col(node_col).alias("node")).distinct()
-    e = (
+    e = scope.persist(
         edges.select(F.col(id_a).alias("src"), F.col(id_b).alias("dst"))
         .where(F.col("src") != F.col("dst"))
         .distinct()
-        .persist()
     )
 
     def fingerprint(df: DataFrame) -> tuple[int, int]:
@@ -1289,23 +1116,20 @@ def _connected_components_star(
         ).collect()[0]
         return row["n"], row["h"]
 
-    first_gen = e  # the persist()'d input edge list
     prev_fp = fingerprint(e)
     converged = False
-    # CheckpointJanitor frees the superseded generation's blocks each
-    # round — executor storage stays one-generation flat however many
-    # rounds the contraction takes (see test_checkpoint_release)
-    janitor = CheckpointJanitor(e.sparkSession)
     for _ in range(max_iter):
         # localCheckpoint (not persist): each round's plan references the
         # previous round twice per star op, so the LOGICAL plan doubles
         # every round and Catalyst re-optimization comes to dominate
         # wall-clock (~70s/round by round 3 on a 999-edge chain);
         # checkpointing truncates lineage so each round plans O(1) work
-        new_e = janitor.checkpoint(_small_star(_large_star(e)))
+        new_e = scope.checkpoint(_small_star(_large_star(e)))
         fp = fingerprint(new_e)
-        if e is first_gen:
-            e.unpersist()  # real persist() → real release
+        # the superseded generation goes as soon as the next one lands:
+        # executor storage stays one generation flat however many
+        # rounds the contraction takes
+        scope.release(e)
         e = new_e
         if fp == prev_fp:
             converged = True
@@ -1316,8 +1140,6 @@ def _connected_components_star(
             f"star connected_components did not converge within {max_iter} rounds"
         )
     # fixpoint edges are (child, center) stars; centers/singletons → self
-    # (the final checkpoint generation is released the same way once this
-    # frame returns and the last reference drops)
     labels = e.select(
         F.greatest("src", "dst").alias("node"), F.least("src", "dst").alias("component")
     ).distinct()
@@ -1356,10 +1178,9 @@ def minhash_lsh_pairs_cross(
             F.col(id_col).alias("doc_id_"),
             word_shingles(tokenize(F.col(text_col)), shingle_n).alias("shingles"),
         )
-        return (
+        return scope.persist(
             s.select("doc_id_", "shingles", minhash_base(F.col("shingles")).alias("_mhbase"))
             .select("doc_id_", "shingles", *minhash_signature(F.col("_mhbase"), num_hashes))
-            .persist()
         )
 
     def banded_of(sig: DataFrame) -> DataFrame:
@@ -1383,8 +1204,6 @@ def minhash_lsh_pairs_cross(
         )
 
     sig_a, sig_b = sig_of(left), sig_of(right)
-    # retire the previous dedup query's intermediates; track this one's
-    _INTERMEDIATES.rollover([sig_a, sig_b])
     banded_a = cap_bucket_size(banded_of(sig_a), ["band", "bucket"], max_bucket, observation)
     banded_b = cap_bucket_size(banded_of(sig_b), ["band", "bucket"], max_bucket, observation_right)
     cand = (
@@ -1548,7 +1367,7 @@ def containment_pairs_prefix(
             )
         ).alias("sh"),
     ).withColumn("sz", F.size("sh"))
-    sh_t = sh_t.persist()
+    sh_t = scope.persist(sh_t)
 
     ex = sh_t.select("doc_id_", "sz", F.explode("sh").alias("s"))
     # NOT persisted: caching this vocab-sized aggregate replaces the
@@ -1649,7 +1468,6 @@ def containment_pairs_prefix(
     # plans static by default).  Only when hot codes exist does the
     # doc-level eligibility probe (one prefix-window pass) and then
     # possibly the L2 branch run.
-    _INTERMEDIATES.rollover([sh_t])
     # single-pass existence aggregates, not filter().limit(1).count():
     # CollectLimit executes incrementally (1 → 4 → 16 … partitions,
     # spark.sql.limit.scaleUpFactor) and on the EMPTY result — the

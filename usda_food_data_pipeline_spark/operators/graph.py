@@ -12,8 +12,8 @@ on src (edges pre-partitioned once and reused via persist), then an
 aggregation on dst. Ranks is a nodes-sized table (≪ edges); AQE
 broadcasts it when it fits, degenerating the iteration to a map-side
 join + one aggregation shuffle. Lineage is truncated per iteration with
-``localCheckpoint`` exactly as in the CC loops (dedup.py:448) so K
-iterations never build a 2^K plan.
+``localCheckpoint`` exactly as in the connected-components loops
+(operators/dedup.py) so K iterations never build a 2^K plan.
 
 Determinism for the oracle gate: per-node contributions are quantized
 to a dyadic 2^-40 grid (``floor(share·2^40)`` — ×2^40 and floor are
@@ -29,6 +29,8 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
+
+from .. import scope
 
 # dyadic quantization grid for cross-engine-exact mass sums (2^40)
 MASS_GRID = 1099511627776.0
@@ -73,22 +75,19 @@ def pagerank(
     ``symmetric=True`` the node set is read
     off the degree table instead of a union-distinct over both endpoint
     columns. Lineage truncates per round with ``localCheckpoint`` (same
-    pattern as the CC loops, dedup.py:448).
+    pattern as the connected-components loops in operators/dedup.py).
     """
-    ed = edges.select("src", "dst").persist()
-    outdeg = (
-        ed.groupBy(F.col("src").alias("node"))
-        .agg(F.count(F.lit(1)).alias("outdeg"))
-        .persist()
+    ed = scope.persist(edges.select("src", "dst"))
+    outdeg = scope.persist(
+        ed.groupBy(F.col("src").alias("node")).agg(F.count(F.lit(1)).alias("outdeg"))
     )
     if symmetric:
         nodes = outdeg.select("node")
     else:
-        nodes = (
+        nodes = scope.persist(
             ed.select(F.col("src").alias("node"))
             .unionByName(ed.select(F.col("dst").alias("node")))
             .distinct()
-            .persist()
         )
     n = nodes.count()  # 1-row statistic, same spirit as the CC convergence probe
     base = (1.0 - damping) / n
@@ -104,14 +103,12 @@ def pagerank(
         # shares table moves per iteration. outdeg materializes from
         # the original cache first so the source lineage never replays.
         outdeg.count()
-        ed_loop = ed.repartition("src").persist()
+        ed_loop = scope.persist(ed.repartition("src"))
         ed_loop.count()
-        ed.unpersist()
+        scope.release(ed)
 
     ranks = nodes.withColumn("rank", F.lit(1.0 / n))
-    from .dedup import CheckpointJanitor
-
-    janitor = CheckpointJanitor(edges.sparkSession)
+    gen = None  # the live checkpointed rank generation
     for _ in range(iters):
         # per-source share on the SMALL table; sinks (no out-edges) drop
         # out of the inner join and correctly contribute nothing
@@ -142,15 +139,11 @@ def pagerank(
             )
         )
         if checkpoint:
-            # superseded rank generations freed explicitly each round
-            # (unpersist is a no-op on checkpoint blocks; ContextCleaner
-            # waits for driver GC) — storage stays one-generation flat
-            ranks = janitor.checkpoint(ranks)
-    # small path: ed_loop IS ed; non-small: ed was released at setup
-    ed_loop.unpersist()
-    outdeg.unpersist()
-    if not symmetric:
-        nodes.unpersist()
+            # the superseded rank generation goes once the next one
+            # lands — storage stays one generation flat
+            ranks = scope.checkpoint(ranks)
+            scope.release(gen)
+            gen = ranks
     return ranks
 
 
@@ -175,9 +168,8 @@ def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFram
     # persist it so the caller's pair-generation subtree executes once
     # (r12 opt, 0.87× same-session A/B: exchange reuse does not cover
     # the full fan-out here, unlike the 2-arm LPA/kcore unions where a
-    # matching persist measured flat and was not landed); released
-    # below once the 1-row result is eagerly checkpointed
-    e = pairs.select(F.col(a).alias("x"), F.col(b).alias("y")).distinct().persist()
+    # matching persist measured flat and was not landed)
+    e = scope.persist(pairs.select(F.col(a).alias("x"), F.col(b).alias("y")).distinct())
     und = e.unionByName(e.select(F.col("y").alias("x"), F.col("x").alias("y")))
     deg = und.groupBy(F.col("x").alias("node")).agg(F.count(F.lit(1)).alias("deg"))
 
@@ -189,7 +181,7 @@ def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFram
     # wedge is generated once, already aligned with its closing edge's
     # orientation. (Ordering wedge pairs by node ID instead would MISS
     # triangles whose closing edge is rank-oriented against ID order.)
-    oriented = (
+    oriented = scope.persist(
         und.join(du, "x")
         .join(dv, "y")
         .filter(
@@ -197,7 +189,6 @@ def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFram
             | ((F.col("dx") == F.col("dy")) & (F.col("x") < F.col("y")))
         )
         .select("x", "y", "dy")
-        .persist()
     )
     o1 = oriented.select(F.col("x").alias("u"), F.col("y").alias("v"), F.col("dy").alias("rv"))
     o2 = oriented.select(F.col("x").alias("u"), F.col("y").alias("w"), F.col("dy").alias("rw"))
@@ -213,10 +204,7 @@ def triangle_count(pairs: DataFrame, a: str = "src", b: str = "dst") -> DataFram
         .crossJoin(e.agg(F.count(F.lit(1)).alias("n_edges")))
         .crossJoin(closed.agg(F.count(F.lit(1)).alias("n_triangles")))
     )
-    result = out.localCheckpoint(eager=True)
-    oriented.unpersist()
-    e.unpersist()
-    return result
+    return scope.checkpoint(out)
 
 
 def copurchase_pairs(lineitem: DataFrame) -> DataFrame:
@@ -291,12 +279,11 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
     Input: ``(src, dst)`` undirected edges (one row per pair, src<dst).
     Output: ``(node, label)`` after ``rounds`` iterations.
     """
-    und = (
+    und = scope.persist(
         edges.select(F.col("src").cast("bigint").alias("n"), F.col("dst").cast("bigint").alias("m"))
         .unionByName(
             edges.select(F.col("dst").cast("bigint").alias("n"), F.col("src").cast("bigint").alias("m"))
         )
-        .persist()
     )
     labels = und.select(F.col("n")).distinct().select(
         "n", F.col("n").alias("label")
@@ -313,10 +300,8 @@ def label_propagation(edges: DataFrame, rounds: int = 3) -> DataFrame:
             ).alias("label")
         )
     # sever the unrolled lineage so downstream consumers don't replay
-    # three join rounds per action, then release the edge cache
-    out = labels.select("n", "label").localCheckpoint(eager=True)
-    und.unpersist()
-    return out
+    # three join rounds per action
+    return scope.checkpoint(labels.select("n", "label"))
 
 
 def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
@@ -351,28 +336,19 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
     Output: ``(n, deg)`` — survivors of ``rounds`` peels with their
     degree inside the surviving induced subgraph.
     """
-    und = (
+    und = scope.persist(
         edges.select(
             F.col("src").cast("bigint").alias("n"),
             F.col("dst").cast("bigint").alias("m"),
-        )
-        .unionByName(
+        ).unionByName(
             edges.select(
                 F.col("dst").cast("bigint").alias("n"),
                 F.col("src").cast("bigint").alias("m"),
             )
         )
-        .persist()
     )
-    # DataFrame.unpersist() is a no-op on localCheckpoint blocks (see
-    # the module note at connected-components and the CheckpointJanitor
-    # docstring; r08 ADVICE): the janitor frees each superseded
-    # survivor-set generation's RDD blocks, keeping exactly one
-    # generation alive per round instead of stranding rounds+1 of them
-    # until driver GC.
-    from .dedup import CheckpointJanitor
-
-    janitor = CheckpointJanitor(edges.sparkSession)
+    # each superseded survivor-set generation is released once the next
+    # lands, keeping one generation alive per round instead of rounds+1
     surv = und.select("n").distinct()
     for _ in range(rounds):
         deg = (
@@ -381,12 +357,13 @@ def kcore_peel(edges: DataFrame, k: int = 2, rounds: int = 3) -> DataFrame:
             .groupBy("n")
             .agg(F.count(F.lit(1)).alias("deg"))
         )
-        surv = janitor.checkpoint(deg.filter(F.col("deg") >= k).select("n"))
-    out = janitor.checkpoint(
+        prev, surv = surv, scope.checkpoint(deg.filter(F.col("deg") >= k).select("n"))
+        scope.release(prev)
+    out = scope.checkpoint(
         und.join(surv, "n")
         .join(surv.select(F.col("n").alias("m")), "m")
         .groupBy("n")
         .agg(F.count(F.lit(1)).cast("bigint").alias("deg"))
     )
-    und.unpersist()
+    scope.release(surv)
     return out

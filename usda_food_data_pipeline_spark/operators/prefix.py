@@ -29,13 +29,8 @@ per-partition stage is therefore ``localCheckpoint``-ed (lineage CUT,
 not just cached): the totals collect materializes the checkpoint
 blocks, and the returned plan reads those same blocks — re-execution
 of the exchange is impossible by construction, not merely unlikely.
-This cache deliberately does NOT join the shared dedup janitor
-(ADVICE r07: a janitor rollover from any subsequent tracked operator
-would have unpersisted a correctness-load-bearing persist() before the
-caller consumed the output, re-running the exchange under a new
-sampling seed against the stale offset map).  The blocks release when
-the returned DataFrame is garbage-collected, like label_propagation's
-checkpoint generations.
+The checkpoint lives as long as the query that built it (see
+``scope``), so no operator call inside that query can free it.
 
 ``token_budget_select`` applies this to the selection step most
 training-data pipelines end with: order the corpus by a quality score
@@ -53,6 +48,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from .. import scope
 from ..operators.dedup import tokenize
 
 SCORE_GRID = 10**6
@@ -82,14 +78,8 @@ def global_prefix_sum(
     # localCheckpoint BEFORE the totals collect: the collect (the first
     # action) materializes the checkpoint blocks, cutting lineage — the
     # offsets and the returned output can only ever read ONE physical
-    # partitioning (see module docstring).  Own lifetime, deliberately
-    # NOT janitor-tracked (ADVICE r07 medium): this block is
-    # correctness-load-bearing for the returned plan, so it must outlive
-    # any interleaved dedup-operator call; it releases with the
-    # DataFrame reference.
-    local = ranged.withColumn("_lcum", F.sum(value_col).over(w)).localCheckpoint(
-        eager=False
-    )
+    # partitioning (see module docstring)
+    local = scope.checkpoint(ranged.withColumn("_lcum", F.sum(value_col).over(w)), eager=False)
 
     totals = sorted(
         local.groupBy("_pid").agg(F.sum(value_col).alias("_t")).collect(),

@@ -26,6 +26,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
+from .. import scope
+
 
 def as_double_array(col: Column | str) -> Column:
     c = F.col(col) if isinstance(col, str) else col
@@ -251,7 +253,7 @@ def kmeans_lloyd(
 
     from ..sources.tables import spread
 
-    embeddings = spread(embeddings).persist()
+    embeddings = scope.persist(spread(embeddings))
     centroids = (
         embeddings.orderBy(id_col)
         .limit(k)
@@ -275,16 +277,14 @@ def kmeans_lloyd(
                 ).alias("new_vec")
             )
         )
-        centroids = (
-            centroids.join(means, "centroid_id", "left")
-            .select(
+        prev, centroids = centroids, scope.persist(
+            centroids.join(means, "centroid_id", "left").select(
                 "centroid_id",
                 F.coalesce("new_vec", F.col(vec_col)).alias(vec_col),  # empty cluster
             )
-            .persist()
         )
         centroids.count()  # materialize this generation
-    embeddings.unpersist()
+        scope.release(prev)
     return centroids
 
 

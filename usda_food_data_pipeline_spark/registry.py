@@ -29,6 +29,7 @@ from .operators.dedup import dedup_latest
 from .operators.pivot import group_avg_pivot
 from .operators.topk import densest_rows
 from .plans.flagship import FLAGSHIP_ORACLE_SQL, flagship_query
+from .scope import scoped
 from .sources.tables import load_table
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
@@ -65,8 +66,11 @@ def guard_observation(name: str):
 
 
 def register(name: str, oracle: str | None, doc: str = "") -> Callable[[QueryFn], QueryFn]:
+    """Register ``fn`` under ``name``; ``queries()`` hands out the
+    :func:`scope.scoped` wrapper, which owns what the build persists."""
+
     def wrap(fn: QueryFn) -> QueryFn:
-        _SPECS.append(QuerySpec(name, fn, oracle, doc))
+        _SPECS.append(QuerySpec(name, scoped(fn), oracle, doc))
         return fn
 
     return wrap

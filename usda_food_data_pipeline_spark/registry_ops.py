@@ -13,6 +13,7 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from . import scope
 from .functions.cleaning import deterministic_sum, oracle_sum_sql
 from .registry import register
 from .sources.tables import load_table
@@ -620,7 +621,7 @@ def q_snapshot_read(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.lit(version).cast("int").alias("version"), "n_rows", "content_sum"
             )
 
-        out = summary(v0).unionByName(summary(v1)).localCheckpoint(eager=True)
+        out = scope.checkpoint(summary(v0).unionByName(summary(v1)))
     finally:
         shutil.rmtree(tmp, ignore_errors=True)
     return out

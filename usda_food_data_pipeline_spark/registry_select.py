@@ -22,12 +22,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .operators.dedup import (
-    _INTERMEDIATES,
-    minhash_lsh_pairs,
-    tokenize,
-    word_shingles,
-)
+from . import scope
+from .operators.dedup import minhash_lsh_pairs, tokenize, word_shingles
 from .registry import register
 from .registry_text import (
     TOKS_SQL,
@@ -176,13 +172,14 @@ def q_coverage_greedy_select(spark: SparkSession, sf_dir: str) -> DataFrame:
     drop rounds, not the data layout.
     """
     docs = _spread(load_table(spark, sf_dir, "documents"))
-    ex0 = docs.select(
-        "doc_id",
-        F.explode(
-            F.array_distinct(word_shingles(tokenize(F.col("text")), _SHINGLE_N))
-        ).alias("t"),
-    ).persist()
-    _INTERMEDIATES.rollover([ex0])
+    ex0 = scope.persist(
+        docs.select(
+            "doc_id",
+            F.explode(
+                F.array_distinct(word_shingles(tokenize(F.col("text")), _SHINGLE_N))
+            ).alias("t"),
+        )
+    )
 
     rows: list[tuple[int, int, int]] = []
     sel_ids: list[int] = []
@@ -940,11 +937,9 @@ def q_market_basket_lift(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast onto the pruned pair table.
     """
     li = load_table(spark, sf_dir, "lineitem")
-    baskets = li.groupBy("l_orderkey").agg(
-        F.sort_array(F.collect_set("l_partkey")).alias("parts")
+    baskets = scope.persist(
+        li.groupBy("l_orderkey").agg(F.sort_array(F.collect_set("l_partkey")).alias("parts"))
     )
-    baskets = baskets.persist()
-    _INTERMEDIATES.rollover([baskets])
     n = baskets.agg(F.count("*").cast("bigint").alias("n_orders"))
     s = (
         baskets.select(F.explode("parts").alias("pk"))

@@ -40,6 +40,7 @@ from .functions.portable_ln import grid_nanos_col as _grid_nanos_col
 from .functions.portable_ln import sql_grid_decimal as _sql_grid_decimal
 from .functions.portable_ln import sql_grid_nanos as _sql_grid_nanos
 from .functions.portable_ln import sql_ln_select as _sql_ln_select
+from . import scope
 from .registry import register
 from .sources.tables import load_table
 
@@ -384,10 +385,7 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-(1-s^r)^b.  Truth comes from the exact prefix-filter operator
     (contractual recall), at the SAME shingle width as the LSH side.
 
-    Composite-janitor discipline (operators/dedup._IntermediateJanitor):
-    each tracked operator's output is persisted and MATERIALIZED before
-    the next tracked call (whose rollover frees the previous build
-    caches), then track()-ed so the next registry query retires it.
+    Each side is read once, by the join, so neither is persisted.
     Bucket ids are floor(jaccard*10) with the identical double op order
     in both engines (bit-equal since the jaccard values themselves are
     attested by dedup_ngram_jaccard/dedup_minhash_lsh).
@@ -404,11 +402,7 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
     the expensive exact operator — that cost is the point of the
     measurement, exactly like adc_recall_eval's brute-force side).
     """
-    from .operators.dedup import (
-        _INTERMEDIATES,
-        jaccard_pairs_prefix,
-        minhash_lsh_pairs,
-    )
+    from .operators.dedup import jaccard_pairs_prefix, minhash_lsh_pairs
     from .registry import guard_observation
 
     obs = guard_observation("lsh_recall_eval")
@@ -417,19 +411,12 @@ def q_lsh_recall_eval(spark: SparkSession, sf_dir: str) -> DataFrame:
         docs, "doc_id", "text",
         threshold_num=_NJ_TN, threshold_den=_NJ_TD, shingle_n=_SHINGLE_N,
         observation=obs,
-    ).persist()
-    truth.count()
-    # minhash's rollover frees the prefix operator's BUILD caches —
-    # harmless, truth is materialized above. Do NOT track truth before
-    # this call or the rollover would free truth itself.
+    )
     lsh = minhash_lsh_pairs(
         docs, "doc_id", "text",
         num_hashes=_NUM_HASHES, bands=_BANDS, shingle_n=_SHINGLE_N,
         jaccard_threshold=_MH_THRESHOLD, observation=obs,
-    ).select("id_a", "id_b", F.lit(1).alias("_hit")).persist()
-    lsh.count()
-    _INTERMEDIATES.track(truth)
-    _INTERMEDIATES.track(lsh)
+    ).select("id_a", "id_b", F.lit(1).alias("_hit"))
     return (
         truth.join(lsh, ["id_a", "id_b"], "left")
         .groupBy(
@@ -2370,15 +2357,20 @@ def q_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
     qchunk order (identical IEEE association on both engines).
     """.format(ch=_MAXSIM_CH, dim=_EMBED_DIM)
     from .operators.dedup import md5_int, tokenize
-
-    from .operators.dedup import _INTERMEDIATES
     from .sources.tables import spread
 
     docs = spread(load_table(spark, sf_dir, "documents"))
     tok_ex = docs.select(
         "doc_id", F.posexplode(tokenize(F.col("text"))).alias("pos", "tok")
     )
-    cnt = (
+    # the bucket-count table feeds FOUR plan branches (nrm, the
+    # query-side slices qcnt/qnrm, and the dot-product join): the
+    # unpersisted form re-ran the tokenize+posexplode+md5 subtree per
+    # branch — 4 corpus scans in the executed plan
+    # (plans/r11/maxsim_retrieval_before.txt). One materialized
+    # (doc, chunk, bucket) table is corpus-token-bounded and at cluster
+    # scale is exactly the intermediate a ColBERT indexer would persist.
+    cnt = scope.persist(
         tok_ex.select(
             "doc_id",
             (F.col("pos") / _MAXSIM_CH).cast("bigint").alias("chunk_id"),
@@ -2386,19 +2378,7 @@ def q_maxsim_retrieval(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .groupBy("doc_id", "chunk_id", "bucket")
         .agg(F.count(F.lit(1)).alias("c"))
-        # the bucket-count table feeds FOUR plan branches (nrm, the
-        # query-side slices qcnt/qnrm, and the dot-product join): the
-        # unpersisted form re-ran the tokenize+posexplode+md5 subtree
-        # per branch — 4 corpus scans in the executed plan
-        # (plans/r11/maxsim_retrieval_before.txt). One materialized
-        # (doc, chunk, bucket) table is corpus-token-bounded and at
-        # cluster scale is exactly the intermediate a ColBERT indexer
-        # would persist.
-        .persist()
     )
-    # retire the previous query's tracked intermediates; track cnt so
-    # the next registry query retires it (the shared janitor discipline)
-    _INTERMEDIATES.rollover([cnt])
     nrm = cnt.groupBy("doc_id", "chunk_id").agg(
         F.sum(F.col("c") * F.col("c")).alias("sq")
     )

@@ -95,15 +95,3 @@ def configure_session(spark: SparkSession) -> SparkSession:
     """
     spark.conf.set("spark.sql.session.timeZone", "UTC")
     return spark
-
-
-def clear_engine_caches(spark: SparkSession) -> None:
-    """Release DataFrames persisted inside operators (MinHash signature
-    tables, component label generations, flagship's dedup spine).
-
-    Those persists are load-bearing within a single query execution but
-    cannot be unpersisted by the operator itself (the result is lazy).
-    Long-lived sessions that run many engine queries should call this
-    between logical units — bench.py and tools/check_correctness.py do.
-    """
-    spark.catalog.clearCache()

@@ -224,12 +224,6 @@ def _header_stat_signature(files: tuple[str, ...]) -> tuple:
     return tuple(sig)
 
 
-def clear_header_probe_cache() -> None:
-    """Drop cached header probes (call after re-staging a release on a
-    store where per-file stat is unavailable)."""
-    _HEADER_PROBE_CACHE.clear()
-
-
 def read_usda_csv(spark: SparkSession, path: str, table: str) -> DataFrame:
     from functools import reduce
 
