@@ -17,14 +17,14 @@ function here:
 
 from __future__ import annotations
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from .functions.embed import embed_text_batch
-from .operators.similarity import cosine_topk
+from .functions.embed import embed_one
+from .operators.similarity import as_double_array, cosine
 from .plans.usda_pipeline import usda_pipeline
 from .sources.sinks import build_embedding_index, write_quoted_csv
-from .sources.tables import read_usda_csv
+from .sources.tables import read_parquet, read_usda_csv
 
 
 def run_pipeline(
@@ -72,23 +72,30 @@ def retrieve(
     dim: int = 64,
 ) -> list[dict]:
     """Reference ``similarity_search`` → ``get_food_nutrients``: embed
-    the query, cosine top-k over the index, attach metadata, return a
-    list of documents (the k-row collect is the sanctioned one —
-    app.py:63-68 does exactly this via Pinecone)."""
-    index = spark.read.parquet(index_path)
-    qdf = spark.createDataFrame([(query_text,)], "q string").select(
-        embed_text_batch(dim)(F.col("q")).alias("embedding")
-    )
-    top = cosine_topk(index, qdf, k=k, id_col=id_col)
-    # a zero-vector query (empty/whitespace text) yields NULL cosines
-    # (try_divide) — return nothing rather than k arbitrary rows
-    top = top.filter(F.col("score").isNotNull())
+    the query on the driver (as app.py's client does), cosine top-k over
+    the index, attach metadata, return a list of documents (the k-row
+    collect is the sanctioned one — app.py:63-68 does exactly this via
+    Pinecone). A warm call runs one job; a query that embeds to the zero
+    vector (empty, blank or None) returns ``[]`` without one."""
+    qvec = embed_one(query_text, dim)
+    if not any(qvec):
+        return []
+    top = _vector_topk(spark, index_path, qvec, id_col, k)
     if metadata_df is not None:
         top = top.join(metadata_df, id_col, "left")
     rows = top.orderBy(F.col("score").desc(), F.col(id_col)).collect()
-    return [
-        {kk: vv for kk, vv in r.asDict().items() if vv is not None} for r in rows
-    ]
+    return [{c: v for c, v in r.asDict().items() if v is not None} for r in rows]
+
+
+def _vector_topk(spark: SparkSession, path: str, qvec: list, id_col: str, k: int) -> DataFrame:
+    """:func:`cosine_topk` with the query as a literal array instead of a
+    broadcast one-row frame; NULL scores (zero vectors) drop."""
+    score = cosine(as_double_array("embedding"), F.array(*map(F.lit, qvec)))
+    scored = read_parquet(spark, path).select(F.col(id_col), score.alias("score"))
+    # NULLs sort last, so filtering the k kept rows drops the same ones
+    # as filtering the scan would, without scoring every row twice
+    top = scored.orderBy(F.col("score").desc(), F.col(id_col)).limit(k)
+    return top.filter(F.col("score").isNotNull())
 
 
 def retrieve_hybrid(
@@ -105,14 +112,12 @@ def retrieve_hybrid(
     """Hybrid retrieval: the reference's vector-only ``similarity_search``
     paired with a lexical BM25 side, fused by reciprocal rank.
 
-    The query text is used twice — embedded for cosine over the index,
-    whitespace-tokenized for BM25 over the corpus — and the two top-
-    ``candidates`` lists merge via :func:`rrf_fuse`. A term or vector
-    miss on one side only weakens, never excludes, a candidate. Returns
-    the fused top-k with both ranks and the document text attached.
+    The query text is used twice — embedded on the driver for cosine
+    over the index, whitespace-tokenized for BM25 over the corpus — and
+    the two top-``candidates`` lists merge via :func:`rrf_fuse`. A term
+    or vector miss on one side only weakens, never excludes, a candidate.
+    Returns the fused top-k with both ranks and the document text attached.
     """
-    from pyspark.sql import Window
-
     from .functions.retrieval import bm25_topk, rrf_fuse
 
     terms = [t for t in query_text.lower().split() if t]
@@ -124,19 +129,12 @@ def retrieve_hybrid(
         .over(Window.orderBy(F.col("bm25").desc(), F.col(id_col)))
         .alias("rank"),
     )
-    index = spark.read.parquet(index_path)
-    qdf = spark.createDataFrame([(query_text,)], "q string").select(
-        embed_text_batch(dim)(F.col("q")).alias("embedding")
-    )
-    vec = (
-        cosine_topk(index, qdf, k=candidates, id_col=id_col)
-        .filter(F.col("score").isNotNull())
-        .select(
-            id_col,
-            F.row_number()
-            .over(Window.orderBy(F.col("score").desc(), F.col(id_col)))
-            .alias("rank"),
-        )
+    # the query vector is non-zero: every term holds a token
+    vec = _vector_topk(spark, index_path, embed_one(query_text, dim), id_col, candidates).select(
+        id_col,
+        F.row_number()
+        .over(Window.orderBy(F.col("score").desc(), F.col(id_col)))
+        .alias("rank"),
     )
     fused = rrf_fuse(lex, vec, id_col, k=k).join(
         docs_df.select(id_col, text_col), id_col, "left"

@@ -3,10 +3,10 @@
 The reference calls Pinecone's hosted ``multilingual-e5-large`` (dim
 1024, utils/upload_data_to_pinecone.py:42-46). The engine ships a
 deterministic hashing featurizer so the whole vector path is testable
-offline: bucket tokens by md5 hash, count, L2-normalize. Pure Catalyst
-expressions — for a model-backed embedder, swap in an Arrow-batched
-``pandas_udf`` with the same ``array<double>`` output column (that is
-the only hot-path Python the engine sanctions, SURVEY §2.9).
+offline. One kernel, :func:`embed_one`, serves both sides: the index
+build maps it over Arrow batches (the only hot-path Python the engine
+sanctions, SURVEY §2.9) and a query is embedded on the driver. A
+model-backed embedder swaps in behind the same two names.
 """
 
 from __future__ import annotations
@@ -16,49 +16,30 @@ import re
 
 import numpy as np
 import pandas as pd
-from pyspark.sql import Column
 from pyspark.sql import functions as F
-
-from ..operators.dedup import md5_int, tokenize
 
 EMBED_SEED = 11
 
 
-def embed_text(text: Column, dim: int = 64) -> Column:
-    """Hashing featurizer: dim-bucket token counts, L2-normalized.
-    Deterministic across engines/partitionings (md5-based buckets)."""
-    buckets = F.transform(tokenize(text), lambda t: md5_int(t, EMBED_SEED) % dim)
-    counts = F.transform(
-        F.sequence(F.lit(0), F.lit(dim - 1)),
-        lambda i: F.size(F.filter(buckets, lambda b: b == i)).cast("double"),
-    )
-    norm = F.sqrt(F.aggregate(counts, F.lit(0.0), lambda a, x: a + x * x))
-    return F.when(norm > 0, F.transform(counts, lambda x: x / norm)).otherwise(counts)
+def embed_one(text: str | None, dim: int = 64) -> list[float]:
+    """Hashing featurizer: md5-bucket counts of the lower-cased tokens
+    between ASCII whitespace (Java's ``\\s``, as Spark's ``split`` sees
+    them: U+00A0 stays inside a token), L2-normalized. Null, empty and
+    whitespace-only text give the zero vector."""
+    toks = [t for t in re.split(r"\s+", (text or "").lower(), flags=re.ASCII) if t]
+    counts = np.zeros(dim, dtype=np.float64)
+    for t in toks:
+        h = int(hashlib.md5(f"s{EMBED_SEED}:{t}".encode()).hexdigest()[:12], 16)
+        counts[h % dim] += 1.0
+    norm = float(np.sqrt((counts * counts).sum()))
+    return (counts / norm).tolist() if norm > 0 else counts.tolist()
 
 
 def embed_text_batch(dim: int = 64):
-    """Arrow-batched pandas UDF twin of :func:`embed_text` — the
-    production path for wide dims (the expression version does O(dim)
-    array passes per row; this one is one linear pass per batch).
-    Bit-compatible: same tokenization, same md5 buckets, same
-    normalization arithmetic."""
-
-    def embed_one(text: str) -> list[float]:
-        # re.ASCII: Java's \s (the expression path's tokenizer) is
-        # ASCII-only; Python's default \s is Unicode-aware and would
-        # split on U+00A0 etc., silently diverging from embed_text
-        toks = [
-            t for t in re.split(r"\s+", (text or "").strip().lower(), flags=re.ASCII) if t
-        ]
-        counts = np.zeros(dim, dtype=np.float64)
-        for t in toks:
-            h = int(hashlib.md5(f"s{EMBED_SEED}:{t}".encode()).hexdigest()[:12], 16)
-            counts[h % dim] += 1.0
-        norm = float(np.sqrt((counts * counts).sum()))
-        return (counts / norm).tolist() if norm > 0 else counts.tolist()
+    """Arrow-batched pandas UDF of :func:`embed_one` over a string column."""
 
     @F.pandas_udf("array<double>")
     def _embed(s: pd.Series) -> pd.Series:
-        return s.map(embed_one)
+        return s.map(lambda t: embed_one(t, dim))
 
     return _embed

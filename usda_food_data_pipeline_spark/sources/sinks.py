@@ -123,8 +123,8 @@ def build_embedding_index(
     """Reference §3.2 made self-contained: embed + write a parquet
     'index' table instead of a network upsert, so correctness is
     checkable offline. The embedder is the deterministic featurizer
-    (functions.embed.embed_text); swap in a model-backed pandas_udf in
-    production."""
+    (functions.embed.embed_one, mapped over Arrow batches); swap in a
+    model-backed one in production, the query side included."""
     from ..functions.embed import embed_text_batch
 
     (

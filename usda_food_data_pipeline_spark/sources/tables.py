@@ -10,6 +10,7 @@ lacked (SURVEY §4).
 from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 TABLES = (
     "region",
@@ -61,6 +62,34 @@ def load_events(spark: SparkSession, sf_dir: str) -> DataFrame:
         "value",
         "props",
     )
+
+
+# Spark's own inferred schema per parquet path, stored with the
+# (name, mtime_ns, size) signature of the data files it came from — file
+# METADATA, the same class as _ROW_GROUPS_CACHE below.  Inference costs a
+# Spark job per read; a read with the memoized schema costs none.  A
+# rewrite changes the signature, and the re-inferred entry replaces the
+# stale one, so the memo holds one entry per path.
+_PARQUET_SCHEMA_CACHE: dict[str, tuple[tuple, StructType]] = {}
+
+
+def read_parquet(spark: SparkSession, path: str) -> DataFrame:
+    """``spark.read.parquet(path)`` that infers the schema once per
+    version of a local directory's data files (``_``/``.`` names are
+    Spark's hidden files), under the conf of that first read."""
+    import os as _os
+    from urllib.parse import urlparse
+
+    walk = _os.walk(urlparse(path).path or path)
+    files = tuple(sorted(_os.path.join(d, f) for d, _, fs in walk for f in fs if f[0] not in "_."))
+    if not files:  # a single file or a non-local store: no memo
+        return spark.read.parquet(path)
+    sig, cached = _stat_signature(files), _PARQUET_SCHEMA_CACHE.get(path)
+    if cached is not None and cached[0] == sig:
+        return spark.read.schema(cached[1]).parquet(path)
+    df = spark.read.parquet(path)
+    _PARQUET_SCHEMA_CACHE[path] = (sig, df.schema)
+    return df
 
 
 def load_tables(
@@ -208,7 +237,7 @@ _HEADER_PROBE_CACHE: dict[
 ] = {}
 
 
-def _header_stat_signature(files: tuple[str, ...]) -> tuple:
+def _stat_signature(files: tuple[str, ...]) -> tuple:
     import os as _os
     from urllib.parse import urlparse
 
@@ -253,7 +282,7 @@ def read_usda_csv(spark: SparkSession, path: str, table: str) -> DataFrame:
     # + unionByName when they differ. Probes are cached per resolved
     # file list, so repeat loads of an unchanged staging dir cost zero
     # extra driver round trips.
-    sig = _header_stat_signature(files)
+    sig = _stat_signature(files)
     cached = _HEADER_PROBE_CACHE.get(files)
     if cached is not None and cached[0] == sig:
         headers = cached[1]
